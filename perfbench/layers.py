@@ -1,7 +1,8 @@
 """Per-layer metrics: name, unit, which way is better, and the end-to-end
 metric and workload each is expected to move.
 
-A workload reports 0 for a layer it does not reach.
+The traced run fails unless each workload reports exactly the metrics
+mapped here to its components; a layer it does not reach reads 0.
 """
 
 from __future__ import annotations

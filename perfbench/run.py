@@ -22,8 +22,9 @@ CHECKOUT = os.getcwd()
 sys.path.insert(0, CHECKOUT)
 
 from perfbench import harness  # noqa: E402
+from perfbench.layers import LAYERS, PER_LAYER  # noqa: E402
 
-SETUPS = 3
+SETUPS = 5
 
 END_TO_END = ("setup_s", "run_s", "items_per_s", "peak_rss_mb")
 
@@ -38,11 +39,12 @@ def _metric(value, unit):
 
 def run_untraced(w, seconds: float) -> dict:
     off = harness.Tracer(w.spark, enabled=False)
+    prepare_s, _ = harness.timed(w.prepare)
     setup = []
     for i in range(SETUPS):
         dt, _ = harness.timed(w.setup, i)
         setup.append(dt)
-    warm_s, _ = harness.timed(w.warm, off)
+    warm_s = sum(harness.timed(w.run_pass, off)[0] for _ in range(w.warm_passes))
     gc0 = harness.gc_seconds(w.spark)
     times, items = [], 0
     t_end = time.perf_counter() + seconds
@@ -52,7 +54,7 @@ def run_untraced(w, seconds: float) -> dict:
         items += n
     gc_s = harness.gc_seconds(w.spark) - gc0
     rss = harness.peak_rss_mb(w.spark)
-    log(f"setup {setup} warm-up {warm_s:.2f} passes {times} gc {gc_s:.2f} peak rss MiB {rss}")
+    log(f"inputs {prepare_s:.2f} setup {setup} warm-up {warm_s:.2f} passes {times} gc {gc_s:.2f} peak rss MiB {rss}")
     return {
         "setup_s": _metric(statistics.median(setup), "s"),
         "run_s": _metric(statistics.median(times), "s"),
@@ -67,8 +69,10 @@ def run_traced(w) -> dict:
     from datalake2anomali_spark.plans.protocol_queries import CACHE_COUNTERS
 
     cache0 = dict(CACHE_COUNTERS)
+    w.prepare()
     w.setup(0)
-    w.warm(harness.Tracer(w.spark, enabled=False))
+    for _ in range(w.warm_passes):
+        w.run_pass(harness.Tracer(w.spark, enabled=False))
     tr = harness.Tracer(w.spark, enabled=True)
     cpu0, gc0 = harness.cpu_seconds(w.spark), harness.gc_seconds(w.spark)
     with harness.IdlePoller(w.spark) as poller, tr.span("pass"):
@@ -78,6 +82,7 @@ def run_traced(w) -> dict:
     pass_span = tr.find("pass")[0]
     pass_s = pass_span["end"] - pass_span["start"]
     layers = w.layers(tr)
+    reached = {name for name, *_, wls in LAYERS if set(wls) & set(w.components)}
     spark_counts = tr.jobs_in("pass")
     layers.update(
         {
@@ -95,6 +100,11 @@ def run_traced(w) -> dict:
             "trace.spans": len(tr.spans),
         }
     )
+    if set(layers) != reached:
+        raise RuntimeError(
+            f"{w.name} reported layer metrics {sorted(set(layers) - reached)} it does "
+            f"not reach and lacks {sorted(reached - set(layers))} (perfbench/layers.py)"
+        )
     path = os.path.join(
         CHECKOUT, harness.RUN_DIRNAME, "spans", f"{w.name}-seed{w.seed}-{tr.run_id}.jsonl"
     )
@@ -116,7 +126,6 @@ def main(argv=None) -> int:
     scratch = harness.confine(CHECKOUT)
     try:
         import datalake2anomali_spark  # noqa: F401
-        from perfbench.layers import PER_LAYER
         from perfbench.workloads import WORKLOADS, load
     except ImportError as e:
         log(f"cannot import the program: {e}")
@@ -132,6 +141,7 @@ def main(argv=None) -> int:
         w.drop_one = args.drop_one
         if args.trace:
             values = run_traced(w)
+            # a layer the workload does not reach reads 0 (checked in run_traced)
             metrics = {name: _metric(values.get(name, 0), unit) for name, unit in PER_LAYER}
         else:
             values = run_untraced(w, args.seconds)

@@ -1,7 +1,8 @@
 """The benchmark's workloads.
 
-Each workload builds its inputs from the seed (``setup``), runs one pass of
-the program over them (``run_pass``, the timed unit), checks every pass's
+Each workload generates its inputs from the seed (``prepare``, untimed),
+runs the program's set-up over them (``setup``, timed as ``setup_s``), runs
+one pass of the program (``run_pass``, the timed unit), checks every pass's
 output against an independent expectation (``verify``) and, in the traced
 run, decomposes a pass into per-layer metrics (``layers``).
 """
@@ -18,9 +19,8 @@ class Workload:
     item = ""
     #: self-test: make the stand-in lose one object per pass
     drop_one = False
-    #: untimed passes before timing (JIT, Python workers, codegen caches).
-    #: A workload whose warm-up would cost as much as its pass (0)
-    #: measures one cold pass instead, as a fresh scheduled run sees it.
+    #: untimed passes before timing (JIT, Python workers, codegen caches);
+    #: their outputs are verified like every other pass
     warm_passes = 1
     #: timed passes: at least this many, and at least ``--seconds`` of them.
     #: A fixed count keeps the median at the same point of the warm-up
@@ -40,15 +40,19 @@ class Workload:
         os.makedirs(d)
         return d
 
-    def setup(self, index) -> None:
-        """Build the seeded inputs; called several times, the last wins."""
+    @property
+    def components(self) -> tuple[str, ...]:
+        """Names of the component workloads a pass runs (``layers.LAYERS``)."""
+        return (self.name,)
+
+    def prepare(self) -> None:
+        """Generate the seeded inputs (files, frames); untimed, once."""
         raise NotImplementedError
 
-    def warm(self, tr) -> None:
-        """Untimed passes before timing; their outputs are verified like
-        every other pass."""
-        for _ in range(self.warm_passes):
-            self.run_pass(tr)
+    def setup(self, index) -> None:
+        """The program's set-up over the prepared inputs; timed, called
+        several times, the last wins."""
+        raise NotImplementedError
 
     def run_pass(self, tr) -> int:
         """One pass of the program; returns the number of items done."""
@@ -73,6 +77,10 @@ class Composite(Workload):
         self.members = [load(p)(spark, scratch, seed, tiny) for p in self.parts]
 
     @property
+    def components(self) -> tuple[str, ...]:
+        return tuple(m.name for m in self.members)
+
+    @property
     def drop_one(self):
         return self.members[0].drop_one
 
@@ -81,13 +89,13 @@ class Composite(Workload):
         for m in self.members:
             m.drop_one = value
 
+    def prepare(self) -> None:
+        for m in self.members:
+            m.prepare()
+
     def setup(self, index) -> None:
         for m in self.members:
             m.setup(index)
-
-    def warm(self, tr) -> None:
-        for m in self.members:
-            m.warm(tr)
 
     def run_pass(self, tr) -> int:
         items = 0
@@ -117,6 +125,10 @@ class Connector(Composite):
     name = "connector"
     item = "indicator objects and advisories delivered to the sink"
     parts = ("ioc_feed", "bulletin_upsert")
+    #: pass times keep falling for about eight passes (JIT tiers): skip the
+    #: steepest part of the curve, then take the median of five
+    warm_passes = 3
+    timed_passes = 5
 
 
 class Engine(Composite):
@@ -125,6 +137,10 @@ class Engine(Composite):
     name = "engine"
     item = "table operations and registered queries"
     parts = ("table_dml", "operator_mix")
+    #: One cold pass, as a fresh scheduled run sees it.  A pass costs 20 s
+    #: cold and 10-15 s warm, about twice that when the shared host is
+    #: slow; a warm-up and a timed warm pass took 85-95 s per run there,
+    #: which brings a full check of the benchmark to its run budget.
     warm_passes = 0
     timed_passes = 1
 

@@ -29,7 +29,6 @@ from datalake2anomali_spark.sources.datalake import enrich_html
 from .. import standin
 from . import Workload
 
-SERVICE_S = 0.0002
 _EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
 
 
@@ -44,8 +43,8 @@ class BulletinUpsert(Workload):
     name = "bulletin_upsert"
     item = "advisories routed and written"
 
-    def setup(self, index) -> None:
-        d = self.fresh_dir(f"input{index}")
+    def prepare(self) -> None:
+        d = self.fresh_dir("input")
         rng = np.random.default_rng(self.seed)
         n = 200 if self.tiny else 3_000
         ids = np.arange(n, dtype=np.int64)
@@ -80,12 +79,15 @@ class BulletinUpsert(Workload):
         self.adv = adv
         self.state = (state_ids, state_mod, state["id"])
         self.watermark = _ts([watermark])[0]
+
+    def setup(self, index) -> None:
+        # the run's source relations: the advisory feed and the sink state
+        self.adv_df = self.spark.read.parquet(self.adv_path)
+        self.state_df = self.spark.read.parquet(self.state_path)
         self.passes: list[dict] = []
 
     def _routed(self):
-        adv = self.spark.read.parquet(self.adv_path)
-        state = self.spark.read.parquet(self.state_path)
-        return route_upserts(incremental_advisories(adv, state), state)
+        return route_upserts(incremental_advisories(self.adv_df, self.state_df), self.state_df)
 
     def _enriched(self, routed):
         body = F.struct(
@@ -100,9 +102,7 @@ class BulletinUpsert(Workload):
 
     def run_pass(self, tr) -> int:
         counters = standin.Counters(self.sc)
-        api = functools.partial(
-            standin.StandInApi, counters, 1 << 30, SERVICE_S, self.drop_one
-        )
+        api = functools.partial(standin.StandInApi, counters, self.drop_one)
         with tr.span("sinks.write_tipreport_upserts"):
             write_tipreport_upserts(self._enriched(self._routed()), api)
         snap = counters.snapshot()

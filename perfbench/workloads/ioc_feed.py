@@ -2,7 +2,8 @@
 
 Seed-named saved queries go through the ``datalake_bulksearch`` DataSource,
 then ``generate_indicators`` -> ``prepare_objects``/``objects_json`` ->
-``write_intelligence`` into the Anomali stand-in.  Stresses source
+``write_intelligence`` into the Anomali stand-in (one request per saved
+query under its payload cap, see ``perfbench/standin.py``).  Stresses source
 partitions and sink requests; bypasses ``io`` and ``ioc.upsert``.
 
 Verification regenerates the backend's rows independently from their
@@ -46,9 +47,6 @@ META = {
     "classification": "private",
     "expiration_ts": "2026-01-01T01:00:00",
 }
-#: stand-in payload cap and per-request service time
-MAX_PAYLOAD_BYTES = 16_384
-SERVICE_S = 0.002
 TARGET_OBJECTS_PER_REQUEST = 1000
 
 
@@ -121,7 +119,7 @@ class IocFeed(Workload):
     name = "ioc_feed"
     item = "indicator objects accepted by the sink"
 
-    def setup(self, index) -> None:
+    def prepare(self) -> None:
         rng = random.Random(self.seed)
         n = 2 if self.tiny else 8
         self.specs = []
@@ -138,27 +136,24 @@ class IocFeed(Workload):
                     anomali_itype=override,
                 )
             )
-        register_sources(self.spark)
-        self.bulk, self.specs_df = self._inputs(self.specs)
-        self.passes: list[dict] = []
 
-    def _inputs(self, specs):
-        bulk = (
+    def setup(self, index) -> None:
+        register_sources(self.spark)
+        self.bulk = (
             self.spark.read.format("datalake_bulksearch")
-            .option("query_hashes", json.dumps([s.query_hash for s in specs]))
+            .option("query_hashes", json.dumps([s.query_hash for s in self.specs]))
             .option("query_fields", json.dumps(FIELDS))
             .load()
         )
-        return bulk, specs_df(self.spark, specs)
+        self.specs_df = specs_df(self.spark, self.specs)
+        self.passes: list[dict] = []
 
     def _objects(self, bulk, specs):
         return objects_json(prepare_objects(generate_indicators(bulk, specs)))
 
     def _write(self, objects) -> dict:
         counters = standin.Counters(self.sc)
-        api = functools.partial(
-            standin.StandInApi, counters, MAX_PAYLOAD_BYTES, SERVICE_S, self.drop_one
-        )
+        api = functools.partial(standin.StandInApi, counters, self.drop_one)
         write_intelligence(
             objects, api, META, target_objects_per_request=TARGET_OBJECTS_PER_REQUEST
         )

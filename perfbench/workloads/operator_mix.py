@@ -143,21 +143,22 @@ def rows_digest(cols: list[str], rows) -> tuple[int, str]:
 
 class OperatorMix(Workload):
     name = "operator_mix"
-    warm_passes = 0
-    timed_passes = 1
     item = "registered queries run"
 
-    def setup(self, index) -> None:
-        self.sf_dir = self.fresh_dir(f"input{index}")
+    def prepare(self) -> None:
+        self.sf_dir = self.fresh_dir("input")
         write_tables(self.sf_dir, self.seed, 0.02 if self.tiny else 0.2)
+
+    def setup(self, index) -> None:
+        registry = entry.queries()
+        self.queries = {q: registry[q] for q in OPERATOR_QUERIES}
         self.passes: list[dict] = []
 
     def run_pass(self, tr) -> int:
-        queries = entry.queries()
         out = {}
-        for q in OPERATOR_QUERIES:
+        for q, query in self.queries.items():
             with tr.span(f"plans.{q}"):
-                df = queries[q](self.spark, self.sf_dir)
+                df = query(self.spark, self.sf_dir)
                 out[q] = rows_digest(df.columns, df.collect())
         self.passes.append(out)
         return len(out)

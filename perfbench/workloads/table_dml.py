@@ -1,6 +1,6 @@
 """Versioned-table writes beside reads (the ``io`` layer only).
 
-A seeded table (64 partitions) takes a fixed sequence of commits per pass:
+A seeded table (16 partitions x 2000 rows) takes a fixed sequence of commits per pass:
 ``merge_into_versioned``, ``update_versioned`` and ``delete_from_versioned``
 in copy-on-write and merge-on-read modes, ``compact_versioned``, and one
 ``MultiTableTransaction`` over the table and a rollup table.  A
@@ -63,12 +63,9 @@ def _digest(df: pd.DataFrame, cols: list[str]) -> str:
 
 class TableDml(Workload):
     name = "table_dml"
-    warm_passes = 0
-    timed_passes = 1
     item = "table operations (commits and snapshot reads)"
 
-    def setup(self, index) -> None:
-        d = self.fresh_dir(f"input{index}")
+    def prepare(self) -> None:
         self.n_parts = 8 if self.tiny else 16
         per_part = 40 if self.tiny else 2000
         n = self.n_parts * per_part
@@ -86,16 +83,20 @@ class TableDml(Workload):
         rollup = pd.DataFrame(
             {"grp": [f"g{i}" for i in range(N_GROUPS)], "total": np.zeros(N_GROUPS)}
         )
+        self.base, self.base_rollup = base, rollup
+        self.next_id = n
+
+    def setup(self, index) -> None:
+        d = self.fresh_dir(f"tables{index}")
         self.root = os.path.join(d, "main")
         self.rollup_root = os.path.join(d, "rollup")
         self.croot = os.path.join(d, "catalog")
-        init_table(self.spark, self.spark.createDataFrame(base), self.root, PART, stats_cols=["ts"])
-        init_table(self.spark, self.spark.createDataFrame(rollup), self.rollup_root, "grp")
+        s = self.spark
+        init_table(s, s.createDataFrame(self.base), self.root, PART, stats_cols=["ts"])
+        init_table(s, s.createDataFrame(self.base_rollup), self.rollup_root, "grp")
         create_catalog(self.croot)
         catalog_register(self.croot, "main", self.root)
         catalog_register(self.croot, "rollup", self.rollup_root)
-        self.base, self.base_rollup = base, rollup
-        self.next_id = n
         # (op, args, read bounds, read result) per commit, in order
         self.log: list[tuple] = []
         self.passes: list[dict] = []
