@@ -49,72 +49,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # L + staleness_bound, and a never-certified query is always in-window.
 # tests/test_entry_contract.py asserts the ledger, the bound, and the
 # window bookkeeping; no literal counts here (they drift — ADVICE r5).
-#  - _PRIORITY (the round-17 window): ALL 50 entries whose last
-#    certification is round 14, in their CORRECTNESS_r14 order (bound-4
-#    deadline round 18; after the r16 window certified the r13 block,
-#    the r14 block is exactly the stalest cohort — window = 50,
+#  - _PRIORITY (the round-18 window): ALL 50 entries whose last
+#    certification is round 15, in their CORRECTNESS_r15 order (bound-4
+#    deadline round 19; after the r17 window certified the r14 block,
+#    the r15 block is exactly the stalest cohort — window = 50,
 #    cascade 0).
 #  - _TAIL holds exactly the overflow, stalest first:
-#    the round-15-certified block (deadline round 19) in CORRECTNESS_r15
-#    order, then the round-16-certified block (deadline round 20) in
-#    CORRECTNESS_r16 order.
+#    the round-16-certified block (deadline round 20) in CORRECTNESS_r16
+#    order, then the round-17-certified block (deadline round 21) in
+#    CORRECTNESS_r17 order.
 _PRIORITY: tuple[str, ...] = (
-    # last driver row round 14 — deadline round 18 (CORRECTNESS_r14 order)
-    "ioc_incremental_cursor",
-    "dedup_ngram_jaccard",
-    "corpus_stats",
-    "text_profile",
-    "ann_cosine_topk",
-    "ioc_rest_source_pipeline",
-    "stream_interval_join_full",
-    "cdc_view_maintenance",
-    "delete_restore_history",
-    "hidden_partition_pruning",
-    "merge_versioned",
-    "fuzzy_match2",
-    "stream_scd2",
-    "ioc_payload_expiration",
-    "merge_upsert",
-    "exact_quantiles",
-    "cms_counts",
-    "data_quality_audit",
-    "asof_join_click_error",
-    "stream_dedup_late",
-    "sessionize",
-    "grouped_rollup",
-    "running_window",
-    "ioc_payload_json",
-    "dedup_clusters",
-    "dedup_incremental",
-    "embedding_neardup",
-    "stratified_sample",
-    "pack_sequences",
-    "corpus_roundtrip",
-    "scalar_datetime_json",
-    "hypertable_rollup",
-    "status_priority_pivot",
-    "sketch_stats",
-    "range_join_error_clicks",
-    "distinct_set_ops",
-    "ann_lsh_topk",
-    "dedup_simhash",
-    "stream_tumbling_counts",
-    "ann_ivf_topk",
-    "decontaminate",
-    "bm25_scores",
-    "update_set",
-    "update_mor",
-    "multi_statement_txn",
-    "secondary_index_lookup",
-    "cross_table_txn",
-    "shallow_clone_divergence",
-    "branch_merge_disjoint",
-    "stream_into_hidden",
-)
-
-#: Exactly the overflow past the gate window (asserted in
-#: tests/test_entry_contract.py), stalest first.
-_TAIL: tuple[str, ...] = (
     # last driver row round 15 — deadline round 19 (CORRECTNESS_r15 order)
     "column_evolution",
     "ioc_advisory_enrichment",
@@ -166,6 +110,11 @@ _TAIL: tuple[str, ...] = (
     "asof_join_tolerance",
     "multimodal_ops",
     "stream_burst_alerts",
+)
+
+#: Exactly the overflow past the gate window (asserted in
+#: tests/test_entry_contract.py), stalest first.
+_TAIL: tuple[str, ...] = (
     # last driver row round 16 — deadline round 20 (CORRECTNESS_r16 order)
     "string_funcs",
     "burst_alerts",
@@ -217,6 +166,57 @@ _TAIL: tuple[str, ...] = (
     "robust_outliers",
     "item_similarity",
     "ioc_indicators_observed",
+    # last driver row round 17 — deadline round 21 (CORRECTNESS_r17 order)
+    "ioc_incremental_cursor",
+    "dedup_ngram_jaccard",
+    "corpus_stats",
+    "text_profile",
+    "ann_cosine_topk",
+    "ioc_rest_source_pipeline",
+    "stream_interval_join_full",
+    "cdc_view_maintenance",
+    "delete_restore_history",
+    "hidden_partition_pruning",
+    "merge_versioned",
+    "fuzzy_match2",
+    "stream_scd2",
+    "ioc_payload_expiration",
+    "merge_upsert",
+    "exact_quantiles",
+    "cms_counts",
+    "data_quality_audit",
+    "asof_join_click_error",
+    "stream_dedup_late",
+    "sessionize",
+    "grouped_rollup",
+    "running_window",
+    "ioc_payload_json",
+    "dedup_clusters",
+    "dedup_incremental",
+    "embedding_neardup",
+    "stratified_sample",
+    "pack_sequences",
+    "corpus_roundtrip",
+    "scalar_datetime_json",
+    "hypertable_rollup",
+    "status_priority_pivot",
+    "sketch_stats",
+    "range_join_error_clicks",
+    "distinct_set_ops",
+    "ann_lsh_topk",
+    "dedup_simhash",
+    "stream_tumbling_counts",
+    "ann_ivf_topk",
+    "decontaminate",
+    "bm25_scores",
+    "update_set",
+    "update_mor",
+    "multi_statement_txn",
+    "secondary_index_lookup",
+    "cross_table_txn",
+    "shallow_clone_divergence",
+    "branch_merge_disjoint",
+    "stream_into_hidden",
 )
 
 _MODULES = (

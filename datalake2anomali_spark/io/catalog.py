@@ -395,6 +395,10 @@ class MultiTableTransaction:
                 results = {}
                 failure: Exception | None = None
                 for name, fut in zip(names, commit_futs):
+                    if fut.cancelled():
+                        # never started: its head never moved, so it is
+                        # neither a failure nor part of the recovery set
+                        continue
                     try:
                         results[name] = fut.result()
                     # Exception, not BaseException: a KeyboardInterrupt/

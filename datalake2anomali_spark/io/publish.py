@@ -1500,37 +1500,12 @@ def merge_into_versioned(
         data_cols = data_cols + new_cols
 
     affected = _affected_partitions(target, source, key_cols, partition_col)
-    # validate partition values BEFORE claiming a version (ADVICE r7):
-    # raising after the write would orphan a _v{N} directory whose live
-    # _CLAIM marker blocks vacuum for claim_ttl_seconds — a rejected
-    # write must leave no garbage, same contract as CHECK constraints
-    raw_affected = _collect_partition_strings(affected, partition_col)
-    _require_non_null_partitions(raw_affected)
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    merged = _merge_resolved(hit, source, key_cols, data_cols)
-    # CHECK constraints validate the rows being written (batch-bounded;
-    # untouched partitions were validated by the write that produced them).
-    # The constraint aggregate and the write are two consumers of the
-    # merge join — checkpoint lazily: the constraint aggregate that
-    # immediately follows materializes it inside its own job (one driver
-    # action instead of two, guide §5), and the write reuses the rows.
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    # fresh claimed directory — no localCheckpoint needed: the plan's input
-    # files are never the write target, the core advantage of immutability
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "merge", merged, commit_hook,
-        ref=ref,
+    return _commit_rewrite(
+        spark, root, manifest, target, partition_col,
+        _collect_partition_strings(affected, partition_col),
+        lambda hit: _merge_resolved(hit, source, key_cols, data_cols),
+        "merge", commit_hook=commit_hook, ref=ref,
     )
-    return v
 
 
 def sync_versioned(
@@ -1591,32 +1566,16 @@ def sync_versioned(
         .union(doomed.select(partition_col).distinct())
         .distinct()
     )
-    # NULL partitions are rejected here, so the eqNullSafe arm of the
-    # old broadcast join is unreachable and the shared literal-isin
-    # selection is equality-identical; the affected list is
-    # driver-bounded by the partition count — the same bound the collect
-    # already imposes.
-    raw_affected = _collect_partition_strings(affected, partition_col)
-    _require_non_null_partitions(raw_affected)
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    upserted = _merge_resolved(hit, source, key_cols, data_cols)
     # subtract the doomed keys: they are target-only, so removing them
     # from the merged output can never touch an upserted source row
-    merged = upserted.join(doomed.select(*key_cols), key_cols, "left_anti")
-
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "sync", merged, ref=ref,
+    return _commit_rewrite(
+        spark, root, manifest, target, partition_col,
+        _collect_partition_strings(affected, partition_col),
+        lambda hit: _merge_resolved(hit, source, key_cols, data_cols).join(
+            doomed.select(*key_cols), key_cols, "left_anti"
+        ),
+        "sync", ref=ref,
     )
-    return v
 
 
 def optimize_partitions(
@@ -1689,72 +1648,17 @@ def optimize_partitions(
     if not chosen:
         return manifest["version"], []
 
-    target = read_snapshot(spark, root, partition_col)
-    # the isin filter partition-prunes at planning time, so the rewrite
-    # reads only the chosen partitions; one task per partition coalesces
-    # its fragments into a single sorted file
-    hit = (
-        target.filter(F.col(partition_col).cast("string").isin(chosen))
-        .repartition(len(chosen), F.col(partition_col))
-        .sortWithinPartitions(partition_col, order_col)
+    # the isin selection partition-prunes at planning time, so the
+    # rewrite reads only the chosen partitions; one task per partition
+    # coalesces its fragments into a single sorted file
+    v = _commit_rewrite(
+        spark, root, manifest, read_snapshot(spark, root, partition_col),
+        partition_col, chosen,
+        lambda hit: hit.repartition(
+            len(chosen), F.col(partition_col)
+        ).sortWithinPartitions(partition_col, order_col),
+        f"optimize({len(chosen)} partitions)", check=False,
     )
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    hit.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    written_counts = {
-        str(p): n
-        for p, n in _written_partition_counts(spark, vdir, partition_col).items()
-    }
-    chosen_set = set(chosen)
-    parts = {
-        p: (v if p in chosen_set else ver)
-        for p, ver in manifest["partitions"].items()
-    }
-    rows = dict(manifest.get("rows", {}))
-    rows.update(written_counts)
-    new_manifest = {
-        "version": v,
-        "partitions": parts,
-        "operation": f"optimize({len(chosen)} partitions)",
-        "rows": {p: rows[p] for p in parts if p in rows},
-    }
-    if "constraints" in manifest:
-        new_manifest["constraints"] = manifest["constraints"]
-    if "schema" in manifest:
-        new_manifest["schema"] = manifest["schema"]
-    old_stats = manifest.get("stats")
-    if old_stats:
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        kept = {p: st for p, st in old_stats.items() if p not in chosen_set}
-        kept.update(_partition_stats(spark, vdir, partition_col, stats_cols))
-        new_manifest["stats"] = {p: kept[p] for p in parts if p in kept}
-    old_blooms = manifest.get("bloom")
-    if old_blooms:
-        # rebuilt filters must share the table's recorded geometry —
-        # kept and rebuilt bitmaps coexist in one manifest
-        g_m, g_k = _manifest_bloom_geometry(manifest)
-        bloom_cols = _bloom_col_union(old_blooms)
-        keptb = {p: bm for p, bm in old_blooms.items() if p not in chosen_set}
-        keptb.update(
-            _partition_blooms(spark, vdir, partition_col, bloom_cols, m=g_m, k=g_k)
-        )
-        new_manifest["bloom"] = {p: keptb[p] for p in parts if p in keptb}
-        if manifest.get("bloom_geometry"):
-            new_manifest["bloom_geometry"] = dict(manifest["bloom_geometry"])
-    carried_dv = _carry_dv(manifest, chosen_set)
-    if carried_dv:
-        new_manifest["dv"] = carried_dv
-    carried_ap = _carry_appends(manifest, chosen_set)
-    if carried_ap:
-        new_manifest["appends"] = carried_ap
-    if manifest.get("fallback_roots"):
-        new_manifest["fallback_roots"] = list(manifest["fallback_roots"])
-    for log in ("renames", "adds"):
-        if manifest.get(log):
-            new_manifest[log] = list(manifest[log])
-    _commit_checked(root, new_manifest, manifest["version"])
     return v, sorted(chosen)
 
 
@@ -1832,26 +1736,14 @@ def cdc_apply_versioned(
     )
     if bad_ops:
         raise ValueError(f"unknown CDC op values: {bad_ops}")
-    raw_affected = [r["_val"] for r in rows if r["_t"] == 0]
-    _require_non_null_partitions(raw_affected)
-
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    merged = _merge_resolved(hit, ups.select(*data_cols), key_cols, data_cols)
-    merged = merged.join(F.broadcast(dels), key_cols, "left_anti")
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "cdc_apply", merged,
+    return _commit_rewrite(
+        spark, root, manifest, target, partition_col,
+        [r["_val"] for r in rows if r["_t"] == 0],
+        lambda hit: _merge_resolved(
+            hit, ups.select(*data_cols), key_cols, data_cols
+        ).join(F.broadcast(dels), key_cols, "left_anti"),
+        "cdc_apply",
     )
-    return v
 
 
 def delete_from_versioned(
@@ -1891,80 +1783,30 @@ def delete_from_versioned(
         raise ValueError(f"unknown delete mode {mode!r}")
     manifest = read_manifest(root, ref=ref)
     target = read_snapshot(spark, root, partition_col, ref=ref)
+    # the bare condition (not its NULL-coalesced form) stays prunable:
+    # its partition conjuncts reach the scan
+    doomed = target.filter(condition)
     if mode == "merge_on_read":
-        if not key_cols:
-            raise ValueError("merge_on_read delete requires key_cols")
-        old_dv = manifest.get("dv")
-        if old_dv and old_dv["key_cols"] != list(key_cols):
-            raise ValueError(
-                f"table vectors are keyed by {old_dv['key_cols']}; "
-                f"got {list(key_cols)}"
-            )
-        doomed = target.filter(condition)
-        # group by the Spark string rendering: these keys become the
-        # manifest's dv/appends/deleted keys and must match the hive
-        # encoding the read path compares against (see
-        # _collect_partition_strings)
-        counts_raw = (
-            doomed.groupBy(
-                F.col(partition_col).cast("string").alias(partition_col)
-            )
-            .count()
-            .collect()
+        return _commit_merge_on_read(
+            spark, root, manifest, partition_col, doomed, key_cols,
+            "delete_mor", commit_hook=commit_hook, ref=ref,
         )
-        if not counts_raw:
-            return manifest["version"]  # nothing to delete: no commit
-        _require_non_null_partitions([r[0] for r in counts_raw])
-        counts = {r[0]: int(r[1]) for r in counts_raw}
-
-        v = _claim_version(root)
-        doomed.select(partition_col, *key_cols).write.mode("overwrite").parquet(
-            _dv_dir(root, v)
+    affected = [
+        p
+        for p in _collect_partition_strings(
+            _dml_homes(doomed, partition_col), partition_col
         )
-        files = {
-            p: list(vs) for p, vs in (old_dv or {}).get("files", {}).items()
-        }
-        deleted = dict((old_dv or {}).get("deleted", {}))
-        for p, n in counts.items():
-            files.setdefault(p, []).append(v)
-            deleted[p] = int(deleted.get(p, 0)) + n
-        new_manifest = dict(manifest)
-        new_manifest["version"] = v
-        new_manifest["operation"] = "delete_mor"
-        new_manifest["dv"] = {
-            "key_cols": list(key_cols),
-            "files": files,
-            "deleted": deleted,
-        }
-        if commit_hook is not None:
-            commit_hook()
-        _commit_checked(root, new_manifest, manifest["version"], ref=ref)
-        return v
-
-    affected_vals = {
-        v
-        for v in _collect_partition_strings(
-            target.filter(condition).select(partition_col).distinct(),
-            partition_col,
-        )
-        if v is not None  # NULL partitions never match the hive keys
-    }
-    if not affected_vals:
+        if p is not None  # NULL partitions never match the hive keys
+    ]
+    if not affected:
         return manifest["version"]  # nothing to delete: no empty commit
-
-    hit = _hit_partitions(target, partition_col, affected_vals)
+    # survivors are rows of an already-validated snapshot: no CHECK job;
     # NULL-condition rows survive (ANSI DELETE), hence coalesce not ~cond
-    survivors = hit.filter(F.coalesce(~condition, F.lit(True)))
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    survivors.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        affected_vals, "delete", survivors, commit_hook, ref=ref,
+    return _commit_rewrite(
+        spark, root, manifest, target, partition_col, affected,
+        lambda hit: hit.filter(F.coalesce(~condition, F.lit(True))),
+        "delete", commit_hook=commit_hook, ref=ref, check=False,
     )
-    return v
 
 
 def update_versioned(
@@ -2020,200 +1862,43 @@ def update_versioned(
         raise ValueError(f"unknown update mode {mode!r}")
     manifest = read_manifest(root, ref=ref)
     target = read_snapshot(spark, root, partition_col, ref=ref)
-    data_cols = list(target.columns)
-    schema = {f.name: f.dataType for f in target.schema.fields}
-    unknown = [c for c in set_exprs if c not in schema]
-    if unknown:
-        raise ValueError(
-            f"UPDATE assigns unknown columns {sorted(unknown)}; "
-            "UPDATE cannot add columns — use MERGE with schema evolution"
-        )
-
-    cond_true = F.coalesce(condition.cast("boolean"), F.lit(False))
-    matched = target.filter(cond_true)
-    if mode == "merge_on_read":
-        return _update_merge_on_read(
-            spark, root, partition_col, manifest, matched, set_exprs,
-            schema, data_cols, key_cols, ref, commit_hook,
-        )
-    old_homes = matched.select(partition_col).distinct()
-    if partition_col in set_exprs:
-        new_homes = matched.select(
-            set_exprs[partition_col].cast(schema[partition_col]).alias(partition_col)
-        ).distinct()
-        affected = old_homes.union(new_homes).distinct()
-    else:
-        affected = old_homes
-    raw_affected = _collect_partition_strings(affected, partition_col)
-    if not raw_affected:
-        return manifest["version"]  # nothing matched: no empty commit
-    _require_non_null_partitions(raw_affected)
-
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    # one projection does both halves: matched rows take the SET exprs,
+    cond = _cond_true(condition)
+    # validates the SET columns for both modes; for copy-on-write one
+    # projection does both halves: matched rows take the SET exprs,
     # survivors pass through — no union, no second scan
-    content = hit.select(
-        *[
-            F.when(cond_true, set_exprs[c].cast(schema[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in data_cols
+    assigned = _set_columns(target, set_exprs, cond)
+    matched = target.filter(cond)
+    if mode == "merge_on_read":
+        frozen = [
+            c for c in set_exprs if c == partition_col or c in (key_cols or ())
         ]
-    )
-    if manifest.get("constraints"):
-        content = content.localCheckpoint(eager=False)
-        _check_constraints(content, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    content.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "update", content, commit_hook,
-        ref=ref,
-    )
-    return v
-
-
-def _update_merge_on_read(
-    spark: SparkSession,
-    root: str,
-    partition_col: str,
-    manifest: dict,
-    matched: DataFrame,
-    set_exprs: dict,
-    schema: dict,
-    data_cols: list[str],
-    key_cols: list[str] | None,
-    ref: str | None,
-    commit_hook,
-) -> int:
-    """The merge-on-read arm of :func:`update_versioned`: deletion
-    vector for the matched rows' pre-images + append-delta of their
-    replacements, one atomic commit, no partition rewrites."""
-    if not key_cols:
-        raise ValueError("merge_on_read update requires key_cols")
-    frozen = [c for c in set_exprs if c == partition_col or c in key_cols]
-    if frozen:
-        raise ValueError(
-            f"merge_on_read UPDATE cannot reassign partition/key columns "
-            f"{sorted(frozen)}; use mode='copy_on_write'"
+        if frozen:
+            raise ValueError(
+                f"merge_on_read UPDATE cannot reassign partition/key columns "
+                f"{sorted(frozen)}; use mode='copy_on_write'"
+            )
+        # materialize the matched set once: the vector write, the count,
+        # and the replacement write would otherwise each re-run the
+        # snapshot scan + predicate (and diverge under a nondeterministic
+        # predicate); the checkpoint is O(updated rows) — exactly what
+        # this commit writes anyway.  Lazy: the count aggregate
+        # materializes it inside its own job (guide §5)
+        matched = matched.localCheckpoint(eager=False)
+        return _commit_merge_on_read(
+            spark, root, manifest, partition_col, matched, key_cols,
+            "update_mor", commit_hook=commit_hook, ref=ref,
+            replacement=matched.select(*_set_columns(matched, set_exprs)),
         )
-    old_dv = manifest.get("dv")
-    if old_dv and old_dv["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"table vectors are keyed by {old_dv['key_cols']}; "
-            f"got {list(key_cols)}"
-        )
-    # materialize the matched set once: the vector write, the count, and
-    # the replacement write below would otherwise each re-run the
-    # snapshot scan + predicate (and diverge under a nondeterministic
-    # predicate); the checkpoint is O(updated rows) — exactly what this
-    # commit writes anyway.  Lazy: the count aggregate that immediately
-    # follows materializes it inside its own job — one driver action per
-    # commit instead of two (guide §5)
-    matched = matched.localCheckpoint(eager=False)
-    # Spark-rendered keys, for the same manifest-key consistency as the
-    # MoR delete arm (see _collect_partition_strings)
-    counts_raw = (
-        matched.groupBy(
-            F.col(partition_col).cast("string").alias(partition_col)
-        )
-        .count()
-        .collect()
+    affected = _collect_partition_strings(
+        _dml_homes(matched, partition_col, set_exprs), partition_col
     )
-    if not counts_raw:
+    if not affected:
         return manifest["version"]  # nothing matched: no empty commit
-    _require_non_null_partitions([r[0] for r in counts_raw])
-    counts = {r[0]: int(r[1]) for r in counts_raw}
-
-    replacement = matched.select(
-        *[
-            set_exprs[c].cast(schema[c]).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in data_cols
-        ]
+    return _commit_rewrite(
+        spark, root, manifest, target, partition_col, affected,
+        lambda hit: hit.select(*assigned), "update",
+        commit_hook=commit_hook, ref=ref,
     )
-    if manifest.get("constraints"):
-        replacement = replacement.localCheckpoint(eager=False)
-        _check_constraints(replacement, manifest["constraints"])
-
-    v = _claim_version(root)
-    matched.select(partition_col, *key_cols).write.mode("overwrite").parquet(
-        _dv_dir(root, v)
-    )
-    adir = _append_dir(root, v)
-    replacement.write.mode("overwrite").partitionBy(partition_col).parquet(adir)
-    spark.catalog.refreshByPath(adir)
-
-    new_manifest = dict(manifest)
-    new_manifest["version"] = v
-    new_manifest["operation"] = "update_mor"
-    files = {p: list(vs) for p, vs in (old_dv or {}).get("files", {}).items()}
-    deleted = dict((old_dv or {}).get("deleted", {}))
-    for p, n in counts.items():
-        files.setdefault(p, []).append(v)
-        deleted[p] = int(deleted.get(p, 0)) + n
-    new_manifest["dv"] = {
-        "key_cols": list(key_cols),
-        "files": files,
-        "deleted": deleted,
-    }
-    ap = {p: list(vs) for p, vs in (manifest.get("appends") or {}).items()}
-    for p in counts:
-        ap.setdefault(p, []).append(v)
-    new_manifest["appends"] = ap
-    if manifest.get("rows"):
-        # physical rows grow by the appended replacements; the matching
-        # dv['deleted'] growth keeps the metadata-only logical count
-        # (rows − deleted) invariant, as UPDATE must be.  A partition
-        # with no recorded count stays unrecorded (still incomplete).
-        rows = dict(manifest["rows"])
-        for p, n in counts.items():
-            if p in rows:
-                rows[p] = int(rows[p]) + n
-        new_manifest["rows"] = rows
-    old_stats = manifest.get("stats")
-    if old_stats:
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        add = _partition_stats(spark, adir, partition_col, stats_cols)
-        new_manifest["stats"] = {
-            p: _widen_partition_stats(st, add[p]) if p in add else st
-            for p, st in old_stats.items()
-        }
-    old_blooms = manifest.get("bloom")
-    if old_blooms:
-        # the appended rows' filter ORs into the existing bitmaps, so it
-        # MUST be built at the table's recorded geometry
-        g_m, g_k = _manifest_bloom_geometry(manifest)
-        addb = _partition_blooms(
-            spark, adir, partition_col,
-            _bloom_col_union(old_blooms),
-            m=g_m, k=g_k,
-        )
-        # a column whose appended rows are all NULL has no entry in the
-        # append bloom — NULL never matches an equality probe, so the
-        # existing filter stands unchanged (indexing addb[p][c] directly
-        # would crash the commit after the data writes)
-        new_manifest["bloom"] = {
-            p: {
-                c: _or_bloom_hex(bm[c], addb[p][c])
-                if c in addb.get(p, {})
-                else bm[c]
-                for c in bm
-            }
-            if p in addb
-            else bm
-            for p, bm in old_blooms.items()
-        }
-    if commit_hook is not None:
-        commit_hook()
-    _commit_checked(root, new_manifest, manifest["version"], ref=ref)
-    return v
 
 
 def alter_table_columns(
@@ -2652,12 +2337,12 @@ def _require_non_null_partitions(vals) -> None:
 def _collect_partition_strings(affected: DataFrame, partition_col: str) -> list:
     """The affected partition values as SPARK-rendered strings, in one
     collect.  Rendering with ``cast('string')`` on the cluster — not
-    Python ``str()`` on the driver — keeps the hit-selection filter and
-    the ownership comparison in :func:`_commit_ownership_rewrite`
-    consistent with each other and with the hive string encoding the
-    write itself produces (Python and Spark renderings diverge for
-    boolean/float partition values: ``str(True)`` is ``'True'`` but the
-    cast renders ``'true'``).  NULLs survive as ``None`` so
+    Python ``str()`` on the driver — keeps the hit selection and the
+    ownership comparison in :func:`_commit_rewrite` consistent with each
+    other and with the hive string encoding the write itself produces
+    (Python and Spark renderings diverge for boolean/float partition
+    values: ``str(True)`` is ``'True'`` but the cast renders
+    ``'true'``).  NULLs survive as ``None`` so
     :func:`_require_non_null_partitions` still sees them."""
     rows = affected.select(
         F.col(partition_col).cast("string").alias("_p")
@@ -2667,14 +2352,11 @@ def _collect_partition_strings(affected: DataFrame, partition_col: str) -> list:
 
 def _hit_partitions(target: DataFrame, partition_col: str, vals) -> DataFrame:
     """Planning-time selection of the affected partitions by literal
-    ``isin`` over the already-collected, Spark-rendered values — shared
-    by every copy-on-write DML path so the selection semantics cannot
-    drift between them (guide §1.2: the values are already on the
-    driver; a broadcast semi-join would recompute the whole affected
-    subtree a second time inside the write job).  NULLs never match an
-    ``isin`` and are dropped from the literal list (callers either
-    rejected them already or deliberately leave NULL partitions
-    untouched)."""
+    ``isin`` over the already-collected, Spark-rendered values (guide
+    §1.2: the values are already on the driver; a broadcast semi-join
+    would recompute the whole affected subtree a second time inside the
+    write job).  NULLs never match an ``isin`` and are dropped from the
+    literal list."""
     return target.filter(
         F.col(partition_col)
         .cast("string")
@@ -2682,27 +2364,113 @@ def _hit_partitions(target: DataFrame, partition_col: str, vals) -> DataFrame:
     )
 
 
-def _commit_ownership_rewrite(
+def _cond_true(condition):
+    """SQL DML predicate semantics: TRUE rows are selected, FALSE **and
+    NULL** rows are not."""
+    return F.coalesce(condition.cast("boolean"), F.lit(False))
+
+
+def _set_columns(df: DataFrame, set_exprs: dict, cond=None) -> list:
+    """UPDATE ... SET as a projection of ``df``'s columns: an assigned
+    column takes its expression cast to the column's declared type (ANSI
+    assignment cast) — only on rows where ``cond`` holds, when given —
+    and every other column passes through.  Shared by every UPDATE
+    (copy-on-write, merge-on-read, :class:`.transaction.Transaction`)."""
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    unknown = [c for c in set_exprs if c not in schema]
+    if unknown:
+        raise ValueError(
+            f"UPDATE assigns unknown columns {sorted(unknown)}; "
+            "UPDATE cannot add columns — use MERGE with schema evolution"
+        )
+    out = []
+    for c in df.columns:
+        if c not in set_exprs:
+            out.append(F.col(c))
+            continue
+        e = set_exprs[c].cast(schema[c])
+        if cond is not None:
+            e = F.when(cond, e).otherwise(F.col(c))
+        out.append(e.alias(c))
+    return out
+
+
+def _dml_homes(
+    matched: DataFrame, partition_col: str, set_exprs: dict | None = None
+) -> DataFrame:
+    """The distinct partitions an UPDATE/DELETE of ``matched`` rewrites:
+    the matched rows' current homes plus — when ``set_exprs`` reassigns
+    ``partition_col`` — their destinations, so a partition-moving UPDATE
+    rewrites both the old home and the new one (the MERGE old-home
+    discipline)."""
+    homes = matched.select(partition_col)
+    if set_exprs and partition_col in set_exprs:
+        dtype = matched.schema[partition_col].dataType
+        dest = set_exprs[partition_col].cast(dtype).alias(partition_col)
+        homes = homes.union(matched.select(dest))
+    return homes.distinct()
+
+
+def _commit_rewrite(
     spark: SparkSession,
     root: str,
     manifest: dict,
-    v: int,
-    vdir: str,
+    target: DataFrame,
     partition_col: str,
-    affected_vals: set[str],
+    affected,
+    stage,
     operation: str,
-    schema_df: DataFrame,
     commit_hook=None,
     ref: str | None = None,
-) -> None:
-    """Shared commit tail for every copy-on-write DML path (MERGE /
-    DELETE / CDC apply): discover the written partitions with their row
-    counts (one scan), apply the ownership rules — untouched partitions
-    keep their version, rewritten/new take ``v``, affected-but-unwritten
-    (emptied) drop — and maintain rows / zone maps / bloom filters /
-    constraints / schema under those same rules before the checked
-    commit.  Keeping this in one place is what stops the three DML
-    writers from drifting apart."""
+    check: bool = True,
+) -> int:
+    """The copy-on-write commit pipeline — the one path by which MERGE,
+    sync, CDC apply, copy-on-write UPDATE/DELETE, partial OPTIMIZE and
+    :class:`.transaction.Transaction` publish.  The writer supplies its
+    affected set (Spark-rendered partition strings, see
+    :func:`_collect_partition_strings`) and ``stage``, which builds the
+    rows to write from ``target``'s affected partitions.  Phases, in
+    order:
+
+    1. reject NULL partition values in the affected set;
+    2. select the affected partitions (:func:`_hit_partitions`) and
+       stage the rows to write;
+    3. with ``check`` and table CHECK constraints, lazily checkpoint the
+       staged rows and validate them — the constraint aggregate
+       materializes the checkpoint inside its own job and the write
+       reuses the rows (one driver action, guide §5).  Writers whose
+       rows come unchanged from the validated snapshot (DELETE,
+       OPTIMIZE) pass ``check=False``;
+    4. claim a version (:func:`_claim_version`);
+    5. write the staged rows into the claimed directory and refresh it;
+    6. build the manifest under the ownership rules: untouched
+       partitions keep their version, written ones take the new one, and
+       affected-but-unwritten (emptied) ones drop — rows, zone maps,
+       bloom filters, deletion vectors, append-deltas, schema and its
+       event logs all follow the same rules;
+    7. run ``commit_hook`` (tests only: the crash / concurrent-writer
+       injection point);
+    8. compare-and-swap the manifest (:func:`_commit_checked`).
+
+    Invariants: every validation — the writer's own, the NULL check and
+    the constraints — runs before the version claim, so a rejected write
+    leaves no orphan directory or claim marker (ADVICE r7); and the hook
+    runs after the data write, immediately before the CAS.  Returns the
+    published version."""
+    _require_non_null_partitions(affected)
+    affected = set(affected)
+    staged = stage(_hit_partitions(target, partition_col, affected))
+    if check and manifest.get("constraints"):
+        staged = staged.localCheckpoint(eager=False)
+        _check_constraints(staged, manifest["constraints"])
+
+    v = _claim_version(root)
+    vdir = version_dir(root, v)
+    # fresh claimed directory — no checkpoint needed: the plan's input
+    # files are never the write target, the core advantage of immutability
+    staged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
+    spark.catalog.refreshByPath(vdir)
+
     # distinguish "the rewrite emptied everything" (no parquet files on
     # disk — legal, the partitions drop) from a failing scan (I/O error,
     # corrupt footer): treating the latter as emptied would commit a
@@ -2712,54 +2480,50 @@ def _commit_ownership_rewrite(
         for _d, _dn, fs in os.walk(vdir)
         for f in fs
     )
-    if has_files:
-        written_counts = {
+    written = (
+        {
             str(p): n
             for p, n in _written_partition_counts(
                 spark, vdir, partition_col
             ).items()
         }
-    else:
-        written_counts = {}  # every affected partition fully emptied
-    written_vals = set(written_counts)
+        if has_files
+        else {}
+    )
     parts = {
         p: ver
         for p, ver in manifest["partitions"].items()
-        if p not in affected_vals  # untouched partitions keep their version
+        if p not in affected  # untouched partitions keep their version
     }
-    parts.update({p: v for p in written_vals})  # rewritten + new partitions
+    parts.update({p: v for p in written})  # rewritten + new partitions
     rows = {
-        p: n
-        for p, n in manifest.get("rows", {}).items()
-        if p not in affected_vals
+        p: n for p, n in manifest.get("rows", {}).items() if p not in affected
     }
-    rows.update(written_counts)
+    rows.update(written)
     new_manifest = {
         "version": v,
         "partitions": parts,
         "operation": operation,
-        "schema": _schema_record(schema_df),
+        "schema": _schema_record(staged),
         "rows": {p: rows[p] for p in parts if p in rows},
     }
     if "constraints" in manifest:
         new_manifest["constraints"] = manifest["constraints"]
     old_stats = manifest.get("stats")
     if old_stats:
-        # zone maps follow the ownership rules: untouched keep theirs,
-        # rewritten/new recompute from the fresh version dir, emptied drop
         stats_cols = sorted(next(iter(old_stats.values())).keys())
-        kept = {p: st for p, st in old_stats.items() if p not in affected_vals}
-        if written_vals:
+        kept = {p: st for p, st in old_stats.items() if p not in affected}
+        if written:
             kept.update(_partition_stats(spark, vdir, partition_col, stats_cols))
         new_manifest["stats"] = {p: kept[p] for p in parts if p in kept}
     old_blooms = manifest.get("bloom")
     if old_blooms:
-        # same-geometry rule as optimize: rebuilt filters must merge
-        # cleanly with the kept ones
+        # rebuilt filters must share the table's recorded geometry so
+        # they merge cleanly with the kept ones
         g_m, g_k = _manifest_bloom_geometry(manifest)
         bloom_cols = _bloom_col_union(old_blooms)
-        keptb = {p: bm for p, bm in old_blooms.items() if p not in affected_vals}
-        if written_vals:
+        keptb = {p: bm for p, bm in old_blooms.items() if p not in affected}
+        if written:
             keptb.update(
                 _partition_blooms(
                     spark, vdir, partition_col, bloom_cols, m=g_m, k=g_k
@@ -2768,10 +2532,10 @@ def _commit_ownership_rewrite(
         new_manifest["bloom"] = {p: keptb[p] for p in parts if p in keptb}
         if manifest.get("bloom_geometry"):
             new_manifest["bloom_geometry"] = dict(manifest["bloom_geometry"])
-    carried_dv = _carry_dv(manifest, affected_vals)
+    carried_dv = _carry_dv(manifest, affected)
     if carried_dv:
         new_manifest["dv"] = carried_dv
-    carried_ap = _carry_appends(manifest, affected_vals)
+    carried_ap = _carry_appends(manifest, affected)
     if carried_ap:
         new_manifest["appends"] = carried_ap
     if manifest.get("fallback_roots"):
@@ -2805,6 +2569,130 @@ def _commit_ownership_rewrite(
     if commit_hook is not None:
         commit_hook()
     _commit_checked(root, new_manifest, manifest["version"], ref=ref)
+    return v
+
+
+def _commit_merge_on_read(
+    spark: SparkSession,
+    root: str,
+    manifest: dict,
+    partition_col: str,
+    doomed: DataFrame,
+    key_cols: list[str] | None,
+    operation: str,
+    commit_hook=None,
+    ref: str | None = None,
+    replacement: DataFrame | None = None,
+) -> int:
+    """The merge-on-read commit of DELETE and UPDATE: a deletion vector
+    holding ``doomed``'s (partition, key) tuples plus, for an UPDATE,
+    ``replacement`` as an append-delta — one atomic commit, no data
+    partition rewritten.  Key columns are checked against the table's
+    existing vectors and the per-partition deletion counts are collected
+    (one job) before the version claim; constraints validate the
+    replacement rows, also before the claim.  Zone maps and bloom
+    filters WIDEN with the appended rows (never tighten), so metadata
+    skipping stays safe.  An empty ``doomed`` commits nothing and returns
+    the current version."""
+    if not key_cols:
+        raise ValueError("merge_on_read DML requires key_cols")
+    old_dv = manifest.get("dv") or {}
+    if old_dv and old_dv["key_cols"] != list(key_cols):
+        raise ValueError(
+            f"table vectors are keyed by {old_dv['key_cols']}; "
+            f"got {list(key_cols)}"
+        )
+    # group by the Spark string rendering: these keys become the
+    # manifest's dv/appends/deleted keys and must match the hive encoding
+    # the read path compares against (see _collect_partition_strings)
+    counts = {
+        r[0]: int(r[1])
+        for r in doomed.groupBy(
+            F.col(partition_col).cast("string").alias(partition_col)
+        )
+        .count()
+        .collect()
+    }
+    if not counts:
+        return manifest["version"]  # nothing matched: no empty commit
+    _require_non_null_partitions(counts)
+    if replacement is not None and manifest.get("constraints"):
+        replacement = replacement.localCheckpoint(eager=False)
+        _check_constraints(replacement, manifest["constraints"])
+
+    v = _claim_version(root)
+    doomed.select(partition_col, *key_cols).write.mode("overwrite").parquet(
+        _dv_dir(root, v)
+    )
+    files = {p: list(vs) for p, vs in old_dv.get("files", {}).items()}
+    deleted = dict(old_dv.get("deleted", {}))
+    for p, n in counts.items():
+        files.setdefault(p, []).append(v)
+        deleted[p] = int(deleted.get(p, 0)) + n
+    new_manifest = dict(manifest)
+    new_manifest["version"] = v
+    new_manifest["operation"] = operation
+    new_manifest["dv"] = {
+        "key_cols": list(key_cols),
+        "files": files,
+        "deleted": deleted,
+    }
+    if replacement is not None:
+        adir = _append_dir(root, v)
+        replacement.write.mode("overwrite").partitionBy(partition_col).parquet(
+            adir
+        )
+        spark.catalog.refreshByPath(adir)
+        ap = {p: list(vs) for p, vs in (manifest.get("appends") or {}).items()}
+        for p in counts:
+            ap.setdefault(p, []).append(v)
+        new_manifest["appends"] = ap
+        if manifest.get("rows"):
+            # physical rows grow by the appended replacements; the
+            # matching dv['deleted'] growth keeps the metadata-only
+            # logical count (rows − deleted) invariant, as UPDATE must
+            # be.  A partition with no recorded count stays unrecorded.
+            rows = dict(manifest["rows"])
+            for p, n in counts.items():
+                if p in rows:
+                    rows[p] = int(rows[p]) + n
+            new_manifest["rows"] = rows
+        old_stats = manifest.get("stats")
+        if old_stats:
+            stats_cols = sorted(next(iter(old_stats.values())).keys())
+            add = _partition_stats(spark, adir, partition_col, stats_cols)
+            new_manifest["stats"] = {
+                p: _widen_partition_stats(st, add[p]) if p in add else st
+                for p, st in old_stats.items()
+            }
+        old_blooms = manifest.get("bloom")
+        if old_blooms:
+            # the appended rows' filter ORs into the existing bitmaps, so
+            # it MUST be built at the table's recorded geometry
+            g_m, g_k = _manifest_bloom_geometry(manifest)
+            addb = _partition_blooms(
+                spark, adir, partition_col,
+                _bloom_col_union(old_blooms),
+                m=g_m, k=g_k,
+            )
+            # a column whose appended rows are all NULL has no entry in
+            # the append bloom — NULL never matches an equality probe, so
+            # the existing filter stands unchanged
+            new_manifest["bloom"] = {
+                p: {
+                    c: _or_bloom_hex(bm[c], addb[p][c])
+                    if c in addb.get(p, {})
+                    else bm[c]
+                    for c in bm
+                }
+                if p in addb
+                else bm
+                for p, bm in old_blooms.items()
+            }
+    if commit_hook is not None:
+        commit_hook()
+    _commit_checked(root, new_manifest, manifest["version"], ref=ref)
+    return v
 
 
 class TableFollower:

@@ -18,13 +18,11 @@ projection, DELETE a survivor filter, MERGE the full-outer
 source-presence resolution shared with ``operators/merge.py`` — so the
 whole batch is ONE Catalyst plan; the only extra per-statement cost is
 the affected-partition discovery action (a distinct-collect of matched
-partition values, driver state bounded by partition count).  At commit
-the final frame restricted to the affected-partition union writes once
-and publishes through the shared ownership tail
-(:func:`..io.publish._commit_ownership_rewrite`): untouched partitions
-keep their version, rewritten/new take the fresh one, emptied drop, and
-merge-on-read vectors/append-deltas of rewritten partitions materialize
-and clear.
+partition values, driver state bounded by partition count).  UPDATE and
+DELETE build their SET projection and affected homes with the same
+helpers as the single-statement writers.  At commit the final frame
+publishes through the same copy-on-write pipeline as every
+single-statement writer (:func:`..io.publish._commit_rewrite`).
 
 Constraint timing is commit-time (SQL's ``DEFERRABLE INITIALLY
 DEFERRED``): an intermediate statement may violate a CHECK that a later
@@ -39,12 +37,15 @@ from pyspark.sql import functions as F
 
 from .publish import (
     _check_constraints,
-    _claim_version,
-    _commit_ownership_rewrite,
+    _collect_partition_strings,
+    _commit_rewrite,
+    _cond_true,
+    _dml_homes,
+    _hit_partitions,
     _require_non_null_partitions,
+    _set_columns,
     read_manifest,
     read_snapshot,
-    version_dir,
 )
 
 
@@ -78,7 +79,6 @@ class Transaction:
         self._ref = ref
         self._manifest = read_manifest(root, ref=ref)
         self._df = read_snapshot(spark, root, partition_col, ref=ref)
-        self._schema = {f.name: f.dataType for f in self._df.schema.fields}
         self._data_cols = list(self._df.columns)
         self._affected: set[str] = set()
         self._ops: list[str] = []
@@ -92,64 +92,34 @@ class Transaction:
                 "transaction already committed or rolled back; start a new one"
             )
 
-    def _collect_homes(self, homes_df: DataFrame) -> None:
-        # SPARK-rendered strings (cast, not Python str()): these values
-        # feed the commit's cast('string').isin selection and the
-        # manifest ownership keys, and the two renderings diverge for
-        # boolean/float partition values (see
-        # publish._collect_partition_strings)
-        col = homes_df.columns[0]
-        vals = [
-            r[0]
-            for r in homes_df.select(F.col(col).cast("string"))
-            .distinct()
-            .collect()
-        ]
+    def _collect_homes(self, homes_df: DataFrame) -> list:
+        # SPARK-rendered strings: the commit's selection and manifest
+        # ownership keys compare against the hive rendering
+        vals = _collect_partition_strings(homes_df, self._pcol)
         _require_non_null_partitions(vals)
         self._affected.update(vals)
+        return vals
 
     def update(self, condition, set_exprs: dict) -> "Transaction":
         """Stage UPDATE ... SET: TRUE rows take the (type-cast) SET
         expressions, FALSE and NULL rows survive unchanged; reassigning
         ``partition_col`` moves rows (old and new homes both rewrite)."""
         self._check_open()
-        unknown = [c for c in set_exprs if c not in self._schema]
-        if unknown:
-            raise ValueError(
-                f"UPDATE assigns unknown columns {sorted(unknown)}; "
-                "UPDATE cannot add columns"
-            )
-        cond_true = F.coalesce(condition.cast("boolean"), F.lit(False))
-        matched = self._df.filter(cond_true)
-        homes = matched.select(self._pcol)
-        if self._pcol in set_exprs:
-            homes = homes.union(
-                matched.select(
-                    set_exprs[self._pcol]
-                    .cast(self._schema[self._pcol])
-                    .alias(self._pcol)
-                )
-            )
-        self._collect_homes(homes)
-        self._df = self._df.select(
-            *[
-                F.when(cond_true, set_exprs[c].cast(self._schema[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in self._data_cols
-            ]
+        cond = _cond_true(condition)
+        assigned = _set_columns(self._df, set_exprs, cond)
+        self._collect_homes(
+            _dml_homes(self._df.filter(cond), self._pcol, set_exprs)
         )
+        self._df = self._df.select(*assigned)
         self._ops.append("update")
         return self
 
     def delete(self, condition) -> "Transaction":
         """Stage DELETE: TRUE rows go, FALSE and NULL survive (ANSI)."""
         self._check_open()
-        cond_true = F.coalesce(condition.cast("boolean"), F.lit(False))
-        self._collect_homes(self._df.filter(cond_true).select(self._pcol))
-        self._df = self._df.filter(~cond_true)
+        cond = _cond_true(condition)
+        self._collect_homes(_dml_homes(self._df.filter(cond), self._pcol))
+        self._df = self._df.filter(~cond)
         self._ops.append("delete")
         return self
 
@@ -170,17 +140,9 @@ class Transaction:
         if extra:
             raise ValueError(f"merge source adds columns {extra}")
         src = source.select(*self._data_cols)
-        homes_df = _affected_partitions(self._df, src, key_cols, self._pcol)
-        homes = [
-            r[0]
-            for r in homes_df.select(
-                F.col(self._pcol).cast("string")
-            )
-            .distinct()
-            .collect()
-        ]
-        _require_non_null_partitions(homes)
-        self._affected.update(homes)
+        homes = self._collect_homes(
+            _affected_partitions(self._df, src, key_cols, self._pcol)
+        )
         # restrict the full-outer resolution to the merge's own
         # partitions — bystander rows pass through untouched, so a
         # one-partition merge joins one partition, not the whole staged
@@ -207,10 +169,10 @@ class Transaction:
         self._check_open()
         if not self._affected or not self._manifest.get("constraints"):
             return
-        content = self._df.filter(
-            F.col(self._pcol).cast("string").isin(sorted(self._affected))
+        _check_constraints(
+            _hit_partitions(self._df, self._pcol, self._affected),
+            self._manifest["constraints"],
         )
-        _check_constraints(content, self._manifest["constraints"])
 
     def rollback(self) -> None:
         """Discard the staged batch.  Nothing was written — this only
@@ -228,22 +190,8 @@ class Transaction:
         self._closed = True
         if not self._affected:
             return self._manifest["version"]
-
-        content = self._df.filter(
-            F.col(self._pcol).cast("string").isin(sorted(self._affected))
+        return _commit_rewrite(
+            self._spark, self._root, self._manifest, self._df, self._pcol,
+            self._affected, lambda hit: hit, f"txn({','.join(self._ops)})",
+            commit_hook=commit_hook, ref=self._ref,
         )
-        if self._manifest.get("constraints"):
-            # lazy: the constraint aggregate materializes it (guide §5)
-            content = content.localCheckpoint(eager=False)
-            _check_constraints(content, self._manifest["constraints"])
-
-        v = _claim_version(self._root)
-        vdir = version_dir(self._root, v)
-        content.write.mode("overwrite").partitionBy(self._pcol).parquet(vdir)
-        self._spark.catalog.refreshByPath(vdir)
-        _commit_ownership_rewrite(
-            self._spark, self._root, self._manifest, v, vdir, self._pcol,
-            set(self._affected), f"txn({','.join(self._ops)})", content,
-            commit_hook, ref=self._ref,
-        )
-        return v

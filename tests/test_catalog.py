@@ -474,3 +474,66 @@ def test_empty_multi_table_txn_commits_nothing(spark, tmp_path):
     base = catalog_manifest(croot)["version"]
     assert MultiTableTransaction(spark, croot, {}).commit() == base
     assert catalog_manifest(croot)["version"] == base
+
+
+def test_multi_table_txn_cancelled_members_are_not_noted(
+    spark, tmp_path, monkeypatch
+):
+    """Six members, the first commit fails: the raised error is that
+    member's, members cancelled before they started are not noted as
+    failures (their heads never moved), and each stays at its base
+    version.  Members 1-5 hold their commits until the failure handler
+    starts cancelling, so the fifth member is still queued behind the
+    pool's four workers when the cancellation reaches it."""
+    import threading
+    from concurrent.futures import Future
+
+    from datalake2anomali_spark.io.publish import read_manifest
+
+    croot = str(tmp_path / "cat")
+    create_catalog(croot)
+    names = [f"t{i}" for i in range(6)]
+    roots = {n: str(tmp_path / n) for n in names}
+    rows = spark.range(8).select("id", (F.col("id") % 2).cast("int").alias("p"))
+    for n in names:
+        init_table(spark, rows, roots[n], "p")
+        catalog_register(croot, n, roots[n])
+    base = {n: read_manifest(roots[n])["version"] for n in names}
+
+    mtxn = MultiTableTransaction(spark, croot, {n: "p" for n in names})
+    for n in names:
+        mtxn.table(n).delete(F.col("id") == 0)
+
+    def lose_race():
+        raise ConcurrentWriteError("t0 lost its commit race")
+
+    mtxn.table("t0").commit = lose_race
+    released = threading.Event()
+    started = set()
+    for n in names[1:]:
+        txn = mtxn.table(n)
+
+        def held(n=n, real=txn.commit):
+            started.add(n)
+            assert released.wait(60)
+            return real()
+
+        txn.commit = held
+    real_cancel = Future.cancel
+
+    def cancel(fut):
+        out = real_cancel(fut)
+        released.set()
+        return out
+
+    monkeypatch.setattr(Future, "cancel", cancel)
+
+    with pytest.raises(ConcurrentWriteError, match="t0 lost") as err:
+        mtxn.commit()
+    cancelled = [n for n in names[1:] if n not in started]
+    assert cancelled  # at most four members can start before the release
+    notes = " ".join(getattr(err.value, "__notes__", []))
+    for n in cancelled:
+        assert repr(n) not in notes
+        assert read_manifest(roots[n])["version"] == base[n]
+    assert read_manifest(roots["t0"])["version"] == base["t0"]

@@ -776,6 +776,41 @@ def test_partial_optimize_rewrites_only_fragmented(spark, sf_dir, tmp_path):
     assert done_c == [] and v_c == m["version"]
 
 
+def test_partial_optimize_drops_partition_emptied_by_vectors(spark, tmp_path):
+    """A partition whose every row was vector-deleted leaves the manifest
+    when OPTIMIZE rewrites it — it must not stay mapped to a version that
+    holds no directory for it, with its stale physical row count feeding
+    the metadata-only COUNT(*)."""
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        optimize_partitions,
+        snapshot_rowcount,
+        update_versioned,
+    )
+
+    root = str(tmp_path / "emptied")
+    df = spark.range(40).select(
+        "id",
+        (F.col("id") % 2).cast("int").alias("p"),
+        (F.col("id") * 1.5).alias("v"),
+    )
+    init_table(spark, df, root, "p", stats_cols=["v"])
+    # fragment partition 0 with an append-delta, then vector-delete all of it
+    update_versioned(
+        spark, root, "p", F.col("p") == 0, {"v": F.col("v") + 1},
+        mode="merge_on_read", key_cols=["id"],
+    )
+    delete_from_versioned(
+        spark, root, "p", F.col("p") == 0, mode="merge_on_read", key_cols=["id"]
+    )
+    _v, done = optimize_partitions(spark, root, "p", "id", min_files=2)
+    assert "0" in done
+    m = read_manifest(root)
+    assert "0" not in m["partitions"]
+    assert "0" not in m["rows"]
+    assert snapshot_rowcount(root) == read_snapshot(spark, root, "p").count() == 20
+
+
 def test_table_follower_incremental_view_end_to_end(spark, sf_dir, vtable, tmp_path):
     """Follow the table's change feed with a durable version cursor and
     fold each span into a rollup view via retraction: bootstrap arrives
@@ -837,11 +872,52 @@ def test_table_follower_incremental_view_end_to_end(spark, sf_dir, vtable, tmp_p
     assert f.poll(spark)[0] is None
 
 
-def test_check_constraints_enforced_on_writes(spark, sf_dir, tmp_path):
+def _set_event_type_via(writer, spark, root, ids, value):
+    """Set ``event_type`` to ``value`` on the rows ``ids`` through one
+    constraint-enforcing writer."""
+    from datalake2anomali_spark.io.publish import (
+        cdc_apply_versioned,
+        sync_versioned,
+        update_versioned,
+    )
+    from datalake2anomali_spark.io.transaction import Transaction
+
+    cond = F.col("event_id").isin(ids)
+    sets = {"event_type": F.lit(value).cast("string")}
+    rows = read_snapshot(spark, root, "event_date").filter(cond).withColumn(
+        "event_type", sets["event_type"]
+    )
+    keys = ["event_id"]
+    if writer == "merge":
+        merge_into_versioned(spark, root, rows, keys, "event_date")
+    elif writer == "sync":
+        sync_versioned(
+            spark, root, rows, keys, "event_date", delete_condition=F.lit(False)
+        )
+    elif writer == "cdc_apply":
+        cdc_apply_versioned(
+            spark, root, rows.withColumn("_op", F.lit("upsert")), keys,
+            "event_date",
+        )
+    elif writer == "txn":
+        Transaction(spark, root, "event_date").update(cond, sets).commit()
+    else:
+        mode = {"update_cow": "copy_on_write", "update_mor": "merge_on_read"}
+        update_versioned(
+            spark, root, "event_date", cond, sets, mode=mode[writer],
+            key_cols=keys,
+        )
+
+
+@pytest.mark.parametrize(
+    "writer", ["merge", "sync", "cdc_apply", "update_cow", "update_mor", "txn"]
+)
+def test_check_constraints_enforced_on_writes(spark, sf_dir, tmp_path, writer):
     """CHECK constraints gate every write: a violating init refuses, a
-    clean init records them, a violating merge refuses (old snapshot
-    intact, orphan dir vacuumable), NULL expressions pass (ANSI), and
-    the constraint set survives merge/optimize commits."""
+    clean init records them, NULL expressions pass (ANSI), and a
+    violating write through each writer refuses BEFORE any version claim
+    (old snapshot intact, no claim marker, nothing for vacuum); the
+    constraint set survives the writer's commit and compaction."""
     from datalake2anomali_spark.io.publish import (
         ConstraintViolationError,
         compact_versioned,
@@ -850,8 +926,10 @@ def test_check_constraints_enforced_on_writes(spark, sf_dir, tmp_path):
     )
 
     root = str(tmp_path / "events_c")
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "event_date", F.date_format("ts", "yyyy-MM-dd")
+    e = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 300)
+        .withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
     )
     cons = {
         "positive_id": "event_id >= 0",
@@ -867,22 +945,22 @@ def test_check_constraints_enforced_on_writes(spark, sf_dir, tmp_path):
         )
 
     init_table(spark, e, root, "event_date", constraints=cons)
-    fp = _snap_fingerprint(spark, root)
+    ids = sorted(r[0] for r in e.select("event_id").limit(7).collect())
 
     # NULL constraint expression passes (ANSI CHECK)
-    ok = e.limit(3).withColumn("event_type", F.lit(None).cast("string"))
-    merge_into_versioned(spark, root, ok, ["event_id"], "event_date")
+    _set_event_type_via(writer, spark, root, ids[:3], None)
 
-    bad = e.limit(4).withColumn("event_type", F.lit("zzz"))
     with pytest.raises(ConstraintViolationError, match="known_type.*4 row"):
-        merge_into_versioned(spark, root, bad, ["event_id"], "event_date")
-    # refused commit: snapshot unchanged except the earlier OK merge
+        _set_event_type_via(writer, spark, root, ids[3:], "zzz")
+    # refused commit: snapshot unchanged except the earlier OK write
     snap = read_snapshot(spark, root, "event_date")
     assert snap.filter(F.col("event_type") == "zzz").count() == 0
+    assert snap.filter(F.col("event_type").isNull()).count() == 3
     # the check ran BEFORE any version claim: no orphan dir, no stale claim
     assert not [f for f in os.listdir(root) if f.startswith("_CLAIM.")]
     assert vacuum(root, claim_ttl_seconds=0.0) == []
 
+    assert read_manifest(root)["constraints"] == cons
     compact_versioned(spark, root, "event_date", "event_id")
     assert read_manifest(root)["constraints"] == cons
 
